@@ -15,8 +15,12 @@ stays out of scope (SURVEY §7); everything a dashboard client calls is here:
 | POST /api/delete/<type>/<path>        | app.py:140-155 delete | filesystem (containment-checked) |
 | GET  /api/preview/<src>/<file>        | app.py:515-575 | read_spec_csv + validate |
 | POST /api/preview/<src>/<file>/update | app.py:577-623 | sources.edits.update_csv_row |
-| POST /api/preview/<src>/<file>/convert| app.py:625-677 | plans.transform (gated) |
-| POST /api/process/<source_id>         | app.py:161-231 | plans.transform per file |
+| POST /api/preview/<src>/<file>/convert| app.py:625-677 | orchestrate.convert_file |
+| POST /api/process/<source_id>         | app.py:161-231 | orchestrate.process_source (convert_file per file) |
+
+Convert and process share one per-file path, ``orchestrate.convert_file``;
+every listed error comes from ``TransformResult.first_errors``, which
+``plans.transform`` collects while its projection is still cached.
 
 Documented divergence (intentional, like the compiler's): the reference's
 visual-editor save always persists ``filter_rules: []`` — a recorded bug
@@ -31,38 +35,17 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from csv_etl_spark.plans import transform, validate
+from csv_etl_spark import orchestrate
+from csv_etl_spark.plans import validate
 from csv_etl_spark.sources.csv_source import LINE_COL, read_spec_csv, with_line_numbers
 from csv_etl_spark.sources.edits import update_csv_row
-from csv_etl_spark.sources.sinks import write_single_csv_file, write_template_csv
+from csv_etl_spark.sources.sinks import write_template_csv
 from csv_etl_spark.specs import FieldMapping, FileSpec, SpecStore, TransformType
 
 
-# Collect caps: the reference UI shows at most 50 errors (app.py:221) and
-# pages its previews (app.py:667), so unbounded collects buy nothing and are
-# a driver-OOM hazard on big files.  ``cap=None`` means these defaults, NOT
-# unbounded.
-DEFAULT_ERROR_CAP = 50
+# The reference pages its previews (app.py:667): an unbounded collect buys
+# nothing and is a driver-OOM hazard on big files.
 DEFAULT_PREVIEW_ROWS = 500
-
-
-def _error_entries(result, cap: int | None = None) -> list[dict]:
-    """Errors DF → reference JSON shape (line/field/message/value).
-    ``cap=None`` applies DEFAULT_ERROR_CAP — collects are always bounded."""
-    df = result.errors
-    rows = df.limit(cap if cap is not None else DEFAULT_ERROR_CAP).collect()
-    out = []
-    for r in rows:
-        d = r.asDict()
-        out.append(
-            {
-                "line": d.get(LINE_COL),
-                "field": d.get("field"),
-                "message": d.get("message"),
-                "value": str(d["source_value"]) if d.get("source_value") else "",
-            }
-        )
-    return out
 
 
 def create_app(
@@ -333,7 +316,7 @@ def create_app(
                     "error_count": result.error_count,
                     "logs": result.log_messages[-50:],
                 }
-                for e in _error_entries(result):
+                for e in result.first_errors:
                     errors_by_line.setdefault(e["line"], []).append(
                         {k: e[k] for k in ("field", "message", "value")}
                     )
@@ -380,14 +363,8 @@ def create_app(
         if not destination:
             return jsonify({"error": "Destination not found"}), 404
 
-        out_file = out_root / destination.default_directory / f"{path.stem}_{destination.id}.csv"
-        df = with_line_numbers(read_spec_csv(spark, str(path), source))
-        result = transform(
-            df,
-            mapping,
-            fail_on_error=True,
-            line_col=LINE_COL,
-            write=lambda out: write_single_csv_file(out, str(out_file)),
+        result, out_file = orchestrate.convert_file(
+            spark, source, destination, mapping, path, out_root
         )
         if result.error_count > 0:
             return (
@@ -397,7 +374,7 @@ def create_app(
                         "message": f"Conversion failed with {result.error_count} errors",
                         "errors": [
                             {k: e[k] for k in ("line", "field", "message")}
-                            for e in _error_entries(result, cap=20)
+                            for e in result.first_errors[:20]
                         ],
                         "logs": result.log_messages,
                     }
@@ -417,8 +394,6 @@ def create_app(
 
     @app.post("/api/process/<source_id>")
     def process(source_id: str):
-        from csv_etl_spark.orchestrate import process_source
-
         data = request.get_json() or request.form or {}
         mapping_id = data.get("mapping_id")
         if not mapping_id:
@@ -427,7 +402,9 @@ def create_app(
             return jsonify({"error": "Mapping not found"}), 404
         try:
             return jsonify(
-                process_source(spark, store, mapping_id, str(in_root), str(out_root))
+                orchestrate.process_source(
+                    spark, store, mapping_id, str(in_root), str(out_root)
+                )
             )
         except ValueError as exc:
             return jsonify({"error": str(exc)}), 400

@@ -25,58 +25,47 @@ INPUT_DIR = DATA_DIR / "in"
 OUTPUT_DIR = DATA_DIR / "out"
 
 
-def _write_single(df, path: Path) -> int:
+def _process_revolut(
+    spark: SparkSession, subdir: str, plan, label: str, account_name: str
+) -> int:
+    """Run a typed Revolut plan over every CSV in ``data/in/<subdir>``,
+    one ``<stem>_ghostfolio.csv`` per input file."""
+    from csv_etl_spark.plans.typed import format_ghostfolio_for_csv
+    from csv_etl_spark.sources.csv_source import read_spec_csv
     from csv_etl_spark.sources.sinks import write_single_csv_file
 
-    n = df.count()
-    write_single_csv_file(df, str(path))
-    return n
+    input_dir = INPUT_DIR / subdir
+    output_dir = OUTPUT_DIR / "ghostfolio"
+    if not input_dir.exists():
+        return 0
+    output_dir.mkdir(parents=True, exist_ok=True)
+    total = 0
+    for csv_file in sorted(input_dir.glob("*.csv")):
+        print(f"Processing ({label}): {csv_file.name}")
+        df = read_spec_csv(spark, str(csv_file.resolve()))
+        out = format_ghostfolio_for_csv(plan(df, account_name=account_name))
+        out_file = output_dir / f"{csv_file.stem}_ghostfolio.csv"
+        n = out.count()
+        write_single_csv_file(out, str(out_file.resolve()))
+        total += n
+        print(f"  -> {out_file.name} ({n} activities)")
+    return total
 
 
 def process_revolut_stocks(spark: SparkSession, account_name: str | None = None) -> int:
-    from csv_etl_spark.plans.typed import format_ghostfolio_for_csv, revolut_stocks_plan
-    from csv_etl_spark.sources.csv_source import read_spec_csv
+    from csv_etl_spark.plans.typed import revolut_stocks_plan
 
-    input_dir = INPUT_DIR / "revolut_stocks"
-    output_dir = OUTPUT_DIR / "ghostfolio"
-    if not input_dir.exists():
-        return 0
-    output_dir.mkdir(parents=True, exist_ok=True)
-    total = 0
-    for csv_file in sorted(input_dir.glob("*.csv")):
-        print(f"Processing (stocks): {csv_file.name}")
-        df = read_spec_csv(spark, str(csv_file.resolve()))
-        out = format_ghostfolio_for_csv(
-            revolut_stocks_plan(df, account_name=account_name or "Revolut Stocks")
-        )
-        out_file = output_dir / f"{csv_file.stem}_ghostfolio.csv"
-        n = _write_single(out, out_file.resolve())
-        total += n
-        print(f"  -> {out_file.name} ({n} activities)")
-    return total
+    return _process_revolut(
+        spark, "revolut_stocks", revolut_stocks_plan, "stocks", account_name or "Revolut Stocks"
+    )
 
 
 def process_revolut_crypto(spark: SparkSession, account_name: str | None = None) -> int:
-    from csv_etl_spark.plans.typed import format_ghostfolio_for_csv, revolut_crypto_plan
-    from csv_etl_spark.sources.csv_source import read_spec_csv
+    from csv_etl_spark.plans.typed import revolut_crypto_plan
 
-    input_dir = INPUT_DIR / "revolut_crypto"
-    output_dir = OUTPUT_DIR / "ghostfolio"
-    if not input_dir.exists():
-        return 0
-    output_dir.mkdir(parents=True, exist_ok=True)
-    total = 0
-    for csv_file in sorted(input_dir.glob("*.csv")):
-        print(f"Processing (crypto): {csv_file.name}")
-        df = read_spec_csv(spark, str(csv_file.resolve()))
-        out = format_ghostfolio_for_csv(
-            revolut_crypto_plan(df, account_name=account_name or "Revolut Crypto")
-        )
-        out_file = output_dir / f"{csv_file.stem}_ghostfolio.csv"
-        n = _write_single(out, out_file.resolve())
-        total += n
-        print(f"  -> {out_file.name} ({n} activities)")
-    return total
+    return _process_revolut(
+        spark, "revolut_crypto", revolut_crypto_plan, "crypto", account_name or "Revolut Crypto"
+    )
 
 
 def process_dynamic(
@@ -91,6 +80,7 @@ def process_dynamic(
     path, ``app.py:161-231``, headless)."""
     from csv_etl_spark.plans.pipeline import transform
     from csv_etl_spark.sources.csv_source import LINE_COL, read_spec_csv, with_line_numbers
+    from csv_etl_spark.sources.sinks import write_spec_csv
     from csv_etl_spark.specs import SpecStore
 
     store = SpecStore(config_dir)
@@ -100,8 +90,8 @@ def process_dynamic(
     src_spec = store.get_source(mapping.source_id)
     df = with_line_numbers(read_spec_csv(spark, input_dir, src_spec))
     result = transform(
-        df, mapping, output_path=output_dir,
-        fail_on_error=fail_on_error, line_col=LINE_COL,
+        df, mapping, fail_on_error=fail_on_error, line_col=LINE_COL,
+        write=lambda out: write_spec_csv(out, output_dir),
     )
     print(
         f"{result.success_count} valid, {result.skipped_count} skipped, "

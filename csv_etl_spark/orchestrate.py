@@ -2,10 +2,13 @@
 (reference ROADMAP.md "scheduled conversions" — the last road-mapped
 feature family).
 
-``process_source`` is the one shared implementation of "run mapping M
-over every CSV in its source directory, gate on errors, account totals"
-— the dashboard's POST /process (app.py:161-231) and the scheduler both
-call it.
+``convert_file`` is the one per-file conversion path (the reference's
+``DynamicTransformer.transform_file``): read with line numbers, gated
+``transform``, single-CSV write to ``<stem>_<destination id>.csv``.  The
+dashboard's convert route calls it for one file; ``process_source`` calls
+it for every CSV in the mapping's source directory and accounts totals —
+the dashboard's POST /process (app.py:161-231) and the scheduler both
+call that.
 
 ``Scheduler`` is deliberately clock-injected and poll-driven: jobs carry
 a monotonic next-run deadline, ``run_pending()`` executes due jobs and
@@ -25,10 +28,39 @@ from typing import Callable
 
 from pyspark.sql import SparkSession
 
-from csv_etl_spark.plans import transform
+from csv_etl_spark.plans import TransformResult, transform
+from csv_etl_spark.plans.pipeline import ERROR_LIST_CAP
 from csv_etl_spark.sources.csv_source import LINE_COL, read_spec_csv, with_line_numbers
 from csv_etl_spark.sources.sinks import write_single_csv_file
-from csv_etl_spark.specs import SpecStore
+from csv_etl_spark.specs import ETLMapping, FileSpec, SpecStore
+
+
+def convert_file(
+    spark: SparkSession,
+    source: FileSpec,
+    destination: FileSpec,
+    mapping: ETLMapping,
+    csv_file: Path,
+    output_root: str | Path,
+    fail_on_error: bool = True,
+) -> tuple[TransformResult, Path]:
+    """Transform one source CSV and, behind the fail-on-error gate, write
+    ``<output_root>/<destination dir>/<stem>_<destination id>.csv``
+    (reference app.py:194-212, 640-660).  Returns the result and the
+    output path, which exists only if ``result.output_written``."""
+    out_file = (
+        Path(output_root) / destination.default_directory
+        / f"{csv_file.stem}_{destination.id}.csv"
+    )
+    df = with_line_numbers(read_spec_csv(spark, str(csv_file), source))
+    result = transform(
+        df,
+        mapping,
+        fail_on_error=fail_on_error,
+        line_col=LINE_COL,
+        write=lambda out: write_single_csv_file(out, str(out_file)),
+    )
+    return result, out_file
 
 
 def process_source(
@@ -38,14 +70,13 @@ def process_source(
     input_root: str,
     output_root: str,
     fail_on_error: bool = True,
-    error_cap: int = 50,
 ) -> dict:
-    """Process every ``*.csv`` of the mapping's source directory through
-    the compiled mapping; per-file gated single-CSV outputs named
-    ``<stem>_<destination_id>.csv`` (reference app.py:194-212 semantics).
+    """Run ``convert_file`` over every ``*.csv`` of the mapping's source
+    directory.
 
     Returns the reference's accounting shape: success/skipped/error
-    totals, first ``error_cap`` errors with file context, last-100 logs.
+    totals, the first ``ERROR_LIST_CAP`` errors with file context,
+    last-100 logs.
     """
     mapping = store.get_mapping(mapping_id)
     if not mapping:
@@ -56,44 +87,27 @@ def process_source(
         raise ValueError("invalid source or destination in mapping")
 
     input_path = Path(input_root) / source.default_directory
-    out_dir = Path(output_root) / destination.default_directory
     totals = {"success_count": 0, "skipped_count": 0, "error_count": 0}
     all_errors: list[dict] = []
     all_logs: list[str] = []
 
     for csv_file in sorted(input_path.glob("*.csv")):
-        out_file = out_dir / f"{csv_file.stem}_{destination.id}.csv"
-        df = with_line_numbers(read_spec_csv(spark, str(csv_file), source))
-        result = transform(
-            df,
-            mapping,
-            fail_on_error=fail_on_error,
-            line_col=LINE_COL,
-            write=lambda out, p=str(out_file): write_single_csv_file(out, p),
+        result, _ = convert_file(
+            spark, source, destination, mapping, csv_file, output_root, fail_on_error
         )
         totals["success_count"] += result.success_count
         totals["skipped_count"] += result.skipped_count
         totals["error_count"] += result.error_count
-        if len(all_errors) < error_cap:
-            for r in result.errors.limit(error_cap - len(all_errors)).collect():
-                d = r.asDict()
-                all_errors.append(
-                    {
-                        "file": csv_file.name,
-                        "line": d.get(LINE_COL),
-                        "field": d.get("field"),
-                        "message": d.get("message"),
-                        "value": str(d["source_value"]) if d.get("source_value") else "",
-                    }
-                )
+        all_errors += [{"file": csv_file.name, **e} for e in result.first_errors]
         all_logs.extend(f"[{csv_file.name}] {m}" for m in result.log_messages)
 
+    errors = all_errors[:ERROR_LIST_CAP]
     return {
         "mapping_name": mapping.name,
         **totals,
-        "errors": all_errors[:error_cap],
+        "errors": errors,
         "logs": all_logs[-100:],
-        "has_more_errors": totals["error_count"] > len(all_errors),
+        "has_more_errors": totals["error_count"] > len(errors),
     }
 
 

@@ -11,8 +11,10 @@ fail-on-error gate needs the error count before writing anyway — the
 reference buffers the whole output in RAM for the same reason; we persist
 to executor storage instead).  Per-row log lines (V6) are deliberately NOT
 replicated — at 100 TB that's a driver OOM; the errors DF + counters carry
-the same information, and ``errors.limit(n)`` reproduces every UI view the
-reference builds from its error list.
+the same information.  The one bounded driver-side view is
+``TransformResult.first_errors``: the first ``ERROR_LIST_CAP`` errors in
+the reference UI's dict shape, collected from the persisted projection
+before it is released, so no caller rescans the source to list them.
 """
 
 from __future__ import annotations
@@ -25,6 +27,10 @@ from pyspark.sql import functions as F
 
 from csv_etl_spark.compiler import ERRORS_COL, CompiledMapping, compile_mapping
 from csv_etl_spark.specs import ETLMapping
+
+# The reference UI lists at most 50 errors (app.py:221); ``transform``
+# collects that many into ``TransformResult.first_errors``.
+ERROR_LIST_CAP = 50
 
 
 @dataclass
@@ -41,6 +47,8 @@ class TransformResult:
     error_row_count: int = 0
     output: DataFrame | None = None  # destination fields only
     errors: DataFrame | None = None  # field, message, source_value [, _line]
+    # first ERROR_LIST_CAP errors as {line, field, message, value}
+    first_errors: list[dict] = field(default_factory=list)
     output_written: bool = False
     log_messages: list[str] = field(default_factory=list)
 
@@ -99,7 +107,6 @@ def chain_mappings(
 def transform(
     df: DataFrame,
     mapping: ETLMapping | dict,
-    output_path: str | None = None,
     fail_on_error: bool = True,
     dry_run: bool = False,
     line_col: str | None = None,
@@ -112,9 +119,10 @@ def transform(
     ``observe`` metric on the source (collected as a side-effect of the
     counter aggregation over the persisted transform output), so the source
     is never scanned a second time just to count it — at 100 TB the old
-    separate ``df.count()`` was a full extra pass.  ``write`` is an optional
-    callable ``(DataFrame) -> None`` that replaces the default CSV write —
-    lets callers target parquet/Delta without changing gate semantics.
+    separate ``df.count()`` was a full extra pass.  ``write`` is the sink,
+    a callable ``(DataFrame) -> None`` run behind the fail-on-error gate;
+    without it nothing is written.  When there are errors, the first
+    ``ERROR_LIST_CAP`` are listed from the persisted projection too.
     """
     from pyspark.sql import Observation
 
@@ -161,33 +169,40 @@ def transform(
         result.error_count = error_count
         result.error_row_count = error_rows
 
-        err_cols = [F.explode(F.col(ERRORS_COL)).alias("error")]
-        if line_col and line_col in projected.columns:
-            err_cols.insert(0, F.col(line_col))
-        errors_df = projected.select(*err_cols).select(
-            *([line_col] if line_col and line_col in projected.columns else []),
+        line_cols = [line_col] if line_col and line_col in projected.columns else []
+        errors_df = projected.select(
+            *line_cols, F.explode(F.col(ERRORS_COL)).alias("error")
+        ).select(
+            *line_cols,
             F.col("error.field").alias("field"),
             F.col("error.message").alias("message"),
             F.col("error.source_value").alias("source_value"),
         )
         result.errors = errors_df
+        if error_count > 0:
+            result.first_errors = [
+                {
+                    "line": r[line_col] if line_cols else None,
+                    "field": r["field"],
+                    "message": r["message"],
+                    "value": str(r["source_value"]) if r["source_value"] else "",
+                }
+                for r in errors_df.limit(ERROR_LIST_CAP).collect()
+            ]
         output_df = projected.drop(ERRORS_COL, *( [line_col] if line_col else [] ))
         result.output = output_df
 
         # V5/S6: gate — write only when not dry-run, rows exist, and either
         # error-free or fail_on_error=False (dynamic.py:333-343)
-        if not dry_run and (output_path or write) and mapping.field_mappings and kept > 0:
+        if not dry_run and write is not None and mapping.field_mappings and kept > 0:
             if error_count > 0 and fail_on_error:
                 result.add_log(
                     f"OUTPUT SKIPPED: {error_count} errors found. Fix errors before converting."
                 )
             else:
-                if write is not None:
-                    write(output_df)
-                else:
-                    output_df.write.mode("overwrite").option("header", "true").csv(output_path)
+                write(output_df)
                 result.output_written = True
-                result.add_log(f"Output written to {output_path or 'custom sink'}")
+                result.add_log("Output written")
 
         status = "Validation" if dry_run else "Transformation"
         result.add_log(
@@ -200,9 +215,9 @@ def transform(
         # against the cached data above.  Leaving it cached poisons later
         # reads — CacheManager matches on the PLAN, so re-reading a file
         # that was edited in between (the preview → fix-row → convert loop)
-        # would silently serve the stale pre-edit rows.  result.errors /
-        # result.output stay valid and recompute from source on access;
-        # callers wanting them hot can persist them explicitly.
+        # would silently serve the stale pre-edit rows.  result.first_errors
+        # was collected above; result.errors / result.output stay valid and
+        # recompute from source on access.
         projected.unpersist()
 
 

@@ -27,7 +27,6 @@ def read_spec_csv(
     spark: SparkSession,
     path: str,
     spec: FileSpec | None = None,
-    line_numbers: bool = False,
 ) -> DataFrame:
     """S1/S2/S3: header-keyed all-string CSV scan over a file, directory or
     glob.  All columns are StringType — typing happens inside compiled
@@ -44,12 +43,8 @@ def read_spec_csv(
     if spec is not None and not spec.has_header:
         # no header: names come from the spec, positionally
         schema = spec.spark_schema(all_string=True)
-        df = reader.schema(schema).csv(path)
-    else:
-        df = reader.csv(path)
-    if line_numbers:
-        df = with_line_numbers(df)
-    return df
+        return reader.schema(schema).csv(path)
+    return reader.csv(path)
 
 
 def with_line_numbers(df: DataFrame) -> DataFrame:

@@ -1,6 +1,6 @@
 """CSV sink (S5-S7).
 
-S5: header + fixed column order (reference ``loaders/csv_loader.py:14-23``,
+S5: header + mapping column order (reference ``loaders/csv_loader.py:14-23``,
 ``dynamic.py:338-343``).  ``single_file=True`` coalesces to one partition for
 byte-parity with the reference's one-output-file model — correct for
 golden tests, deliberately NOT the default: at scale you want one file per
@@ -32,7 +32,6 @@ _TEMPLATE_VALUES = {
 def write_spec_csv(
     df: DataFrame,
     path: str,
-    spec: FileSpec | None = None,
     single_file: bool = False,
     order_by: str | None = None,
 ) -> None:
@@ -42,10 +41,6 @@ def write_spec_csv(
     order before a single-file write, matching the reference's stable
     pass-through ordering."""
     out = df
-    if spec is not None:
-        ordered = [c for c in spec.column_names() if c in df.columns]
-        ordered += [c for c in df.columns if c not in ordered]
-        out = df.select(*ordered)
     if order_by and order_by in out.columns:
         out = out.orderBy(order_by).drop(order_by)
     writer = out.coalesce(1) if single_file else out

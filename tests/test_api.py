@@ -152,11 +152,11 @@ def test_preview_row_cap(env):
 
 
 def test_error_entries_default_cap(env, monkeypatch):
-    """cap=None means DEFAULT_ERROR_CAP, never unbounded (api.py facade
-    mirror of the reference UI's 50-error cap, app.py:221)."""
-    import csv_etl_spark.api as api_mod
+    """Listed errors come from the one cap, ERROR_LIST_CAP, never
+    unbounded (the reference UI's 50-error cap, app.py:221)."""
+    from csv_etl_spark.plans import pipeline
 
-    monkeypatch.setattr(api_mod, "DEFAULT_ERROR_CAP", 0)
+    monkeypatch.setattr(pipeline, "ERROR_LIST_CAP", 0)
     client, _, _ = env
     body = client.get("/api/preview/src1/a.csv?mapping_id=m1").get_json()
     assert body["errors_by_line"] == {}  # capped at 0 ⇒ nothing collected

@@ -3227,40 +3227,71 @@ def test_pairwise_corr_arrow_partials_match_jvm_decimal_path(spark):
         (2.0, 3.0),
     ]
     df = spark.createDataFrame(rows, ["x", "y"])
-    got = pairwise_corr(df, ["x", "y"]).collect()[0]
+    # uncentered, and centered on x (pins the Arrow pass's centering branch)
+    for center_x in (0.0, 1.5):
+        centers = {"x": center_x} if center_x else None
+        got = pairwise_corr(df, ["x", "y"], centers=centers).collect()[0]
 
-    # reference: the pre-r17 fused decimal aggregate, spelled inline
-    cond = F.col("x").isNotNull() & F.col("y").isNotNull()
-    qa = F.when(cond, _q(F.col("x"), 0.0))
-    qb = F.when(cond, _q(F.col("y"), 0.0))
-    ref = df.agg(
-        F.count(F.when(cond, 1)).alias("n"),
-        F.sum(qa).alias("sa"),
-        F.sum(qb).alias("sb"),
-        F.sum(qa * qa).alias("saa"),
-        F.sum(qb * qb).alias("sbb"),
-        F.sum(qa * qb).alias("sab"),
-    ).collect()[0]
-    # combine in Spark (JVM HALF_UP round, same double ops as the op)
-    one = spark.createDataFrame(
-        [(ref["n"], ref["sa"], ref["sb"], ref["saa"], ref["sbb"], ref["sab"])],
-        "n bigint, sa decimal(38,0), sb decimal(38,0), saa decimal(38,0),"
-        " sbb decimal(38,0), sab decimal(38,0)",
-    )
-    nn = F.col("n").cast("double")
-    sa, sb = F.col("sa").cast("double"), F.col("sb").cast("double")
-    van = nn * F.col("saa").cast("double") - sa * sa
-    vbn = nn * F.col("sbb").cast("double") - sb * sb
-    cvn = nn * F.col("sab").cast("double") - sa * sb
-    exp = one.select(
-        F.when(
-            (F.col("n") >= 2) & (van > 0) & (vbn > 0),
-            F.round(cvn / F.sqrt(van) / F.sqrt(vbn), 6),
-        ).alias("corr")
-    ).collect()[0]
-    assert got["n"] == ref["n"] == 6
-    assert got["corr"] == exp["corr"] and got["corr"] is not None
+        # reference: the pre-r17 fused decimal aggregate, spelled inline
+        cond = F.col("x").isNotNull() & F.col("y").isNotNull()
+        qa = F.when(cond, _q(F.col("x"), center_x))
+        qb = F.when(cond, _q(F.col("y"), 0.0))
+        ref = df.agg(
+            F.count(F.when(cond, 1)).alias("n"),
+            F.sum(qa).alias("sa"),
+            F.sum(qb).alias("sb"),
+            F.sum(qa * qa).alias("saa"),
+            F.sum(qb * qb).alias("sbb"),
+            F.sum(qa * qb).alias("sab"),
+        ).collect()[0]
+        # combine in Spark (JVM HALF_UP round, same double ops as the op)
+        one = spark.createDataFrame(
+            [(ref["n"], ref["sa"], ref["sb"], ref["saa"], ref["sbb"], ref["sab"])],
+            "n bigint, sa decimal(38,0), sb decimal(38,0), saa decimal(38,0),"
+            " sbb decimal(38,0), sab decimal(38,0)",
+        )
+        nn = F.col("n").cast("double")
+        sa, sb = F.col("sa").cast("double"), F.col("sb").cast("double")
+        van = nn * F.col("saa").cast("double") - sa * sa
+        vbn = nn * F.col("sbb").cast("double") - sb * sb
+        cvn = nn * F.col("sab").cast("double") - sa * sb
+        exp = one.select(
+            F.when(
+                (F.col("n") >= 2) & (van > 0) & (vbn > 0),
+                F.round(cvn / F.sqrt(van) / F.sqrt(vbn), 6),
+            ).alias("corr")
+        ).collect()[0]
+        assert got["n"] == ref["n"] == 6, center_x
+        assert got["corr"] == exp["corr"] and got["corr"] is not None, center_x
     assert QUANT == 1_000_000  # the replica hard-codes the same scale
+
+
+def test_pairwise_corr_hostile_column_names(spark):
+    """Every pair matches numpy whatever the column names: pairs whose
+    names join to the same ``a__b__c`` tag, and names with a backtick,
+    a quote, a dot or a backslash."""
+    import numpy as np
+
+    from csv_etl_spark.operators.stats import pairwise_corr
+
+    rng = np.random.default_rng(11)
+    n = 200
+    vals = [rng.normal(i, 1 + i, n).round(4) for i in range(4)]
+    vals[3] = (vals[3] + 0.7 * vals[2]).round(4)
+    rows = [tuple(float(v[r]) for v in vals) for r in range(n)]
+    for cols in (["a__b", "c", "a", "b__c"], ["x`y", "it's", "p.q", "back\\slash"]):
+        df = spark.createDataFrame(rows, cols)
+        out = {
+            (r["col_x"], r["col_y"]): (r["n"], r["corr"])
+            for r in pairwise_corr(df, cols).collect()
+        }
+        assert len(out) == 6, cols
+        for i, a in enumerate(cols):
+            for j in range(i + 1, len(cols)):
+                exp = float(np.corrcoef(vals[i], vals[j])[0, 1])
+                got_n, got_c = out[(a, cols[j])]
+                assert got_n == n
+                assert got_c == pytest.approx(exp, abs=5e-4), (a, cols[j])
 
 
 def test_pairwise_corr_pairwise_deletion(spark):

@@ -127,3 +127,70 @@ def test_scheduled_processing_picks_up_new_files(spark, etl_env):
     assert job.runs == 2
     assert job.last_result["success_count"] == 3  # reprocessed a + new b
     assert (tmp_path / "out" / "out1" / "b_d.csv").exists()
+
+
+def test_process_source_lists_errors_without_rescanning(spark, tmp_path, monkeypatch):
+    """Errors are listed by ``transform`` from its persisted projection,
+    so no Spark job runs in ``process_source`` after a file's ``transform``
+    returns — not for the malformed file, not for the clean one.  Jobs
+    are attributed by job group: the scan, the transform and the sink each
+    run under their own group, anything else under the outer one."""
+    from csv_etl_spark import orchestrate
+
+    cfg = tmp_path / "config"
+    cfg.mkdir()
+    cols = [{"name": "Date", "type": "string"}, {"name": "Ticker", "type": "string"}]
+    (cfg / "sources.json").write_text(json.dumps({
+        "s": {"id": "s", "name": "s", "default_directory": "in1", "columns": cols}
+    }))
+    (cfg / "destinations.json").write_text(json.dumps({
+        "d": {"id": "d", "name": "d", "default_directory": "out1", "columns": cols}
+    }))
+    (cfg / "mappings.json").write_text(json.dumps({
+        "m": {"id": "m", "name": "m", "source_id": "s", "destination_id": "d",
+              "field_mappings": [
+                  {"destination_field": "date", "source_field": "Date",
+                   "transform_type": "date_format",
+                   "transform_config": {"input_format": "%Y-%m-%d",
+                                        "output_format": "%d.%m.%Y"}},
+                  {"destination_field": "symbol", "source_field": "Ticker",
+                   "transform_type": "direct", "transform_config": {}}],
+              "filter_rules": []}
+    }))
+    in_dir = tmp_path / "in" / "in1"
+    in_dir.mkdir(parents=True)
+    (in_dir / "a.csv").write_text("Date,Ticker\n2024-01-15,AAPL\n2024-01-16,MSFT\n")
+    (in_dir / "b.csv").write_text("Date,Ticker\n2024-02-01,GOOG\nnot-a-date,TSLA\n")
+
+    sc = spark.sparkContext
+
+    def grouped(fn, group):
+        def run(*args, **kwargs):
+            outer = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(group, group)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setJobGroup(outer, outer)
+        return run
+
+    for name in ("read_spec_csv", "transform", "write_single_csv_file"):
+        monkeypatch.setattr(orchestrate, name, grouped(getattr(orchestrate, name), name))
+    process = grouped(orchestrate.process_source, "process_source")
+    result = process(
+        spark, SpecStore(str(cfg)), "m", str(tmp_path / "in"), str(tmp_path / "out")
+    )
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("transform")
+    assert tracker.getJobIdsForGroup("process_source") == []
+
+    assert (result["success_count"], result["error_count"]) == (3, 1)
+    (err,) = result["errors"]
+    assert set(err) == {"file", "line", "field", "message", "value"}
+    assert (err["file"], err["line"], err["field"], err["value"]) == (
+        "b.csv", 3, "date", "not-a-date"
+    )
+    assert err["message"]
+    assert (tmp_path / "out" / "out1" / "a_d.csv").exists()
+    assert not (tmp_path / "out" / "out1" / "b_d.csv").exists()

@@ -5,7 +5,7 @@ from __future__ import annotations
 import os
 
 from csv_etl_spark.plans import transform, validate
-from csv_etl_spark.sources import read_spec_csv
+from csv_etl_spark.sources import read_spec_csv, write_spec_csv
 from csv_etl_spark.sources.csv_source import LINE_COL, with_line_numbers
 from csv_etl_spark.specs import FileSpec, ColumnSpec, ColumnType
 
@@ -39,8 +39,11 @@ def test_transform_counts_and_gate(spark, tmp_path):
     df = with_line_numbers(read_spec_csv(spark, _write_csv(tmp_path)))
     out_dir = str(tmp_path / "out")
 
+    def write(out):
+        write_spec_csv(out, out_dir)
+
     # fail_on_error=True: 2 errors (bad date line 4, lookup miss line 5) → no write
-    r = transform(df, MAPPING, output_path=out_dir, fail_on_error=True, line_col=LINE_COL)
+    r = transform(df, MAPPING, write=write, fail_on_error=True, line_col=LINE_COL)
     assert (r.success_count, r.skipped_count, r.error_count) == (1, 1, 2)
     assert not r.output_written
     assert not os.path.exists(out_dir)
@@ -53,7 +56,7 @@ def test_transform_counts_and_gate(spark, tmp_path):
     assert ("type", 5, "MYSTERY") in errs
 
     # fail_on_error=False: errored rows still written (V5)
-    r2 = transform(df, MAPPING, output_path=out_dir, fail_on_error=False, line_col=LINE_COL)
+    r2 = transform(df, MAPPING, write=write, fail_on_error=False, line_col=LINE_COL)
     assert r2.output_written
     import glob
     files = glob.glob(out_dir + "/*.csv")
@@ -73,7 +76,7 @@ def test_validate_is_dry_run(spark, tmp_path):
 def test_empty_mapping_all_skipped(spark, tmp_path):
     df = read_spec_csv(spark, _write_csv(tmp_path))
     r = transform(df, {"id": "e", "name": "e", "field_mappings": [], "filter_rules": []},
-                  output_path=str(tmp_path / "o"))
+                  write=lambda out: write_spec_csv(out, str(tmp_path / "o")))
     assert (r.success_count, r.skipped_count, r.error_count) == (0, 4, 0)
     assert not r.output_written
 
