@@ -5260,18 +5260,40 @@ def q_record_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale factor (an additive +1M offset would collide with real
     # custkeys once the table passes 1M rows, silently fusing unrelated
     # components while the oracle replays the same bug)
-    c = _t(spark, sf_dir, "customer", parallelize=True).select("c_custkey")
-    key12 = F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 12)
-    base = c.select((F.col("c_custkey") * 4).alias("id"), key12.alias("s"))
-    p1 = c.filter(F.col("c_custkey") % 10 == 0).select(
-        (F.col("c_custkey") * 4 + 1).alias("id"),
-        F.concat(F.lit("z"), F.substring(key12, 2, 11)).alias("s"),
+    #
+    # one projection over one unparallelized scan, not a union of three
+    # filtered selects: filters push below a round-robin repartition, so
+    # the 3 × 4 uses of `ents` inside the fuzzy join planned as 12
+    # distinct exchanges (12 one-task shuffle jobs) that reuse never
+    # merged; the fuzzy join shuffles by its own keys anyway
+    k = F.col("c_custkey")
+    key12 = F.substring(F.md5(k.cast("string")), 1, 12)
+    ents = (
+        _t(spark, sf_dir, "customer")
+        .select(
+            F.explode(
+                F.array(
+                    F.struct((k * 4).alias("id"), key12.alias("s")),
+                    F.when(
+                        k % 10 == 0,
+                        F.struct(
+                            (k * 4 + 1).alias("id"),
+                            F.concat(F.lit("z"), F.substring(key12, 2, 11)).alias("s"),
+                        ),
+                    ),
+                    F.when(
+                        k % 20 == 0,
+                        F.struct(
+                            (k * 4 + 2).alias("id"),
+                            F.concat(F.substring(key12, 1, 11), F.lit("z")).alias("s"),
+                        ),
+                    ),
+                )
+            ).alias("e")
+        )
+        .filter(F.col("e").isNotNull())
+        .select("e.id", "e.s")
     )
-    p2 = c.filter(F.col("c_custkey") % 20 == 0).select(
-        (F.col("c_custkey") * 4 + 2).alias("id"),
-        F.concat(F.substring(key12, 1, 11), F.lit("z")).alias("s"),
-    )
-    ents = base.unionByName(p1).unionByName(p2)
     pairs = fuzzy_string_join(
         ents.select(F.col("id").alias("lid"), "s"),
         ents.select(F.col("id").alias("rid"), F.col("s").alias("t")),

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from csv_etl_spark import local
 from csv_etl_spark.operators._cache import BoundedPersistCache
 from csv_etl_spark.operators.text import ws_tokens
 from csv_etl_spark.sources.tables import ensure_parallelism
@@ -567,6 +568,32 @@ def hamming_distance(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def _union_find_min_root(edges) -> list[tuple]:
+    """(id, cluster_id) for every vertex of a collected (u, v) edge list,
+    cluster_id = min id in the component.  NULL endpoints are vertices
+    (cluster NULL) but never link anything — the distributed tier's
+    equi-joins drop them the same way."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        if u is None or v is None:
+            continue
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return [(x, find(x)) for x in parent]
+
+
 def resolve_duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -578,14 +605,27 @@ def resolve_duplicate_clusters(
     generator (jaccard/LSH/embedding): pairs say "these two match", but
     dedup needs CLUSTERS (keep one doc per component, drop the rest).
 
-    Iterative min-label propagation as DataFrame joins: each round every
-    vertex takes the min of its own label and its neighbors' labels;
-    converges in O(component diameter) rounds — near-dup components are
-    shallow (dup clusters are cliques or short chains), so a handful of
-    rounds in practice, ``max_iterations`` as the safety cap.  Each round
-    is one shuffle join + one aggregation, fully parallel; labels persist
-    per round and the previous round unpersists, so lineage and memory
-    stay bounded (the standard large-graph CC shape minus GraphX).
+    Two tiers, one answer (same rows, same dtypes):
+
+    * **Driver tier** — when the symmetric edge set fits the inline-VALUES
+      bound (``local._MAX_INLINE_ROWS`` directed edges) and the id type is
+      integer or string, the edges are collected once and union-find runs
+      on the driver (min id as root); the result comes back as an
+      inline-VALUES frame.  Exact at any component diameter, and no
+      per-round jobs: on small pair graphs the distributed tier's
+      per-round checkpoint + probe jobs cost far more than the compute.
+    * **Distributed tier** — otherwise, iterative min-label propagation as
+      DataFrame joins: each round every vertex takes the min of its own
+      label and its neighbors' labels; converges in O(component diameter)
+      rounds — near-dup components are shallow (dup clusters are cliques
+      or short chains), so a handful of rounds in practice,
+      ``max_iterations`` as the safety cap (a ``RuntimeWarning`` if it is
+      hit).  Each round is one shuffle join + one aggregation, fully
+      parallel, and checkpointed so lineage and memory stay bounded (the
+      standard large-graph CC shape minus GraphX).
+
+    A pair with a NULL endpoint links nothing: the NULL comes back as its
+    own ``(NULL, NULL)`` row and the other endpoint keeps its own cluster.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -609,14 +649,27 @@ def resolve_duplicate_clusters(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = (
-        edges.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    converged = False
     try:
+        id_type = edges.schema["u"].dataType.simpleString()
+        if id_type in local._INT_TYPES | {"string"}:
+            # bounded collect: one more row than the bound says "too big"
+            # without pulling a data-sized edge list to the driver
+            rows = edges.limit(local._MAX_INLINE_ROWS + 1).collect()
+            if len(rows) <= local._MAX_INLINE_ROWS:
+                # every vertex is some edge's `u` (edges are symmetric),
+                # so the vertex rows never outnumber the edge rows
+                return local.local_values_frame(
+                    pairs.sparkSession,
+                    _union_find_min_root(rows),
+                    f"id {id_type}, cluster_id {id_type}",
+                )
+        labels = (
+            edges.select(F.col("u").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        converged = False
         for _ in range(max_iterations):
             neighbor_min = (
                 edges.join(labels, edges.v == labels.id)

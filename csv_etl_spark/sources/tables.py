@@ -38,6 +38,12 @@ def load_table(
     SLOWER — their narrow scan was never the bottleneck and the extra
     shuffle/python-worker fan-out is pure overhead).  Real 100 TB inputs
     arrive as thousands of row groups and skip this branch entirely.
+
+    Filters push BELOW the round-robin repartition, so a parallelized
+    table read in several differently-filtered branches (a union of
+    filtered selects, say) plans one exchange per branch, and exchange
+    reuse misses: each branch pays its own scan and shuffle job.  Build
+    such inputs in one projection over the table instead.
     """
     if name == "events":
         df = load_events(spark, sf_dir)
@@ -49,7 +55,8 @@ def load_table(
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Repartition up to default parallelism if the plan would run narrower."""
+    """Repartition up to default parallelism if the plan would run narrower
+    (round-robin; see ``load_table`` on filters pushed below it)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)

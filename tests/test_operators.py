@@ -498,6 +498,85 @@ def test_resolve_clusters_long_chain(spark):
     assert len(out) == 13
 
 
+def _random_pair_graph(seed: int, as_str: bool) -> tuple[list, list]:
+    """(pairs, chain): seeded random sparse pairs (components of mixed
+    size and shape), a self-pair, two NULL-endpoint pairs and a 30-hop
+    chain — as bigint or string ids (string ids are unpadded digits, so
+    their min is not the numeric min: "10" < "9")."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 10**12), 60)
+    pairs = [tuple(rng.sample(ids, 2)) for _ in range(45)]
+    pairs += [(ids[0], ids[0])]  # self-pair
+    pairs += [(None, ids[1]), (ids[2], None)]
+    chain = [10**13 + 7 * i for i in range(31)]
+    pairs += list(zip(chain, chain[1:]))
+    if as_str:
+        pairs = [tuple(None if x is None else str(x) for x in p) for p in pairs]
+        chain = [str(x) for x in chain]
+    return pairs, chain
+
+
+def _is_local_scan(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.lstrip().startswith("LocalTableScan")
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_resolve_clusters_driver_tier_matches_distributed(spark, monkeypatch, id_type):
+    """The driver union-find tier and the distributed label-propagation
+    tier return the same rows and dtypes — NULL endpoints, self-pairs and
+    a 30-hop chain included.  The bound is patched to 0 to force the
+    distributed tier."""
+    from csv_etl_spark import local
+
+    def key(row):
+        return tuple((v is None, v) for v in row)
+
+    for seed in (1, 2):
+        rows, chain = _random_pair_graph(seed, id_type == "string")
+        pairs = spark.createDataFrame(rows, f"id_a {id_type}, id_b {id_type}")
+        driver = dedup.resolve_duplicate_clusters(pairs, max_iterations=40)
+        assert _is_local_scan(driver)  # inline VALUES: the driver tier ran
+        with monkeypatch.context() as m:
+            m.setattr(local, "_MAX_INLINE_ROWS", 0)
+            dist = dedup.resolve_duplicate_clusters(pairs, max_iterations=40)
+            assert not _is_local_scan(dist)
+            dist_rows = sorted(map(tuple, dist.collect()), key=key)
+        assert driver.dtypes == dist.dtypes == [
+            ("id", id_type), ("cluster_id", id_type)
+        ]
+        driver_rows = sorted(map(tuple, driver.collect()), key=key)
+        assert driver_rows == dist_rows
+        got = dict(driver_rows)
+        assert got[None] is None  # a NULL endpoint links nothing
+        assert {got[x] for x in chain} == {min(chain)}
+
+
+def test_resolve_clusters_iteration_cap_warns_distributed_only(spark, monkeypatch):
+    """Too small a ``max_iterations`` splits a long chain on the
+    distributed tier and says so with a RuntimeWarning; the driver tier
+    is exact at any diameter."""
+    import warnings
+
+    from csv_etl_spark import local
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "id_a bigint, id_b bigint"
+    )
+    with monkeypatch.context() as m:
+        m.setattr(local, "_MAX_INLINE_ROWS", 0)
+        with pytest.warns(RuntimeWarning, match="did not converge"):
+            dist = dedup.resolve_duplicate_clusters(pairs, max_iterations=2)
+        assert len({r["cluster_id"] for r in dist.collect()}) > 1
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        driver = dedup.resolve_duplicate_clusters(pairs, max_iterations=2)
+    assert {r["cluster_id"] for r in driver.collect()} == {0}
+    assert driver.count() == 31
+
+
 def test_corpus_curation_composition(spark):
     """The corpus_curation contract query's semantics on a controlled
     corpus: score -> gate -> normalized-text dedup (keep min id) ->
@@ -2526,6 +2605,29 @@ def test_interval_overlap_degenerate_intervals(spark):
     assert {(r["rid"], r["lid"]) for r in out2} == {(20, 12)}
 
 
+def test_interval_overlap_duplicate_rows_pair_per_copy(spark):
+    """Row-identical duplicate inputs pair once per copy (SQL join
+    semantics, as documented) — 2 left copies × 3 right copies of one
+    overlapping pair come out as 6 rows, not collapsed to 1."""
+    from datetime import datetime, timedelta
+
+    from csv_etl_spark.operators.joins import interval_overlap_join
+
+    base = datetime(2024, 1, 1)
+    row = (1, 10, base, base + timedelta(minutes=90))
+    left = spark.createDataFrame([row] * 2, ["user_id", "lid", "start", "end"])
+    right = spark.createDataFrame(
+        [(1, 20, base + timedelta(minutes=30), base + timedelta(minutes=150))] * 3,
+        ["user_id", "rid", "start", "end"],
+    )
+    out = interval_overlap_join(
+        left, right, keys=["user_id"], left_id="lid", right_id="rid",
+        bucket_seconds=600,
+    ).collect()
+    assert len(out) == 6
+    assert {(r["lid"], r["rid"], r["overlap_seconds"]) for r in out} == {(10, 20, 3600)}
+
+
 def test_remove_duplicate_spans_plan_is_mask_join_not_token_shuffle(spark):
     """r17 plan pin: removal is a map-side HOF filter behind one small
     mask join — the corpus token stream must NOT ride a collect_list
@@ -3631,6 +3733,41 @@ def test_record_clusters_transitive_closure(spark):
            for r in dedup.resolve_duplicate_clusters(
                pairs, id_a="lid", id_b="rid").collect()}
     assert out == {1: 1, 2: 1, 3: 1}  # 4 is a singleton: not in the graph
+
+
+def test_record_clusters_build_jobs_and_persist_pin(spark, monkeypatch):
+    """Building the registry's record_clusters query on the committed
+    sf0.01 tables launches at most 10 jobs (it launched 36 with per-round
+    label propagation), leaves no RDD persisted behind, and its pair plan
+    carries no round-robin exchange (one-projection entity build)."""
+    from pathlib import Path
+
+    import __spark_entry__ as E
+
+    sf = Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.01"
+    seen = {}
+    resolve = dedup.resolve_duplicate_clusters
+
+    def capture(pairs, *args, **kwargs):
+        seen["pairs"] = pairs
+        return resolve(pairs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "resolve_duplicate_clusters", capture)
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+    outer = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup("record_clusters_build", "record_clusters_build")
+    try:
+        df = E.queries()["record_clusters"](spark, str(sf))
+    finally:
+        sc.setJobGroup(outer, outer)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("record_clusters_build")
+    assert 0 < len(jobs) <= 10, len(jobs)
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
+    plan = seen["pairs"]._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan, plan
+    assert df.count() == 375
 
 
 def test_mad_outliers_plan_no_window_broadcast_bounds(spark):
