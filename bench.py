@@ -45,6 +45,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from csv_etl_spark import get_spark  # noqa: E402
+from csv_etl_spark.operators._cache import clear_all  # noqa: E402
 
 HEADLINE = [
     "etl_dynamic_mapping",
@@ -270,42 +271,6 @@ def main() -> None:
         F.concat(F.lit("x:"), F.col("id").cast("string")).alias("c"),
     ).write.format("noop").mode("overwrite").save()
 
-    def clear_operator_caches() -> None:
-        # persisted shingle/LSH/assignment projections survive across calls
-        # by design (session cache); between bench passes they must go, or
-        # pass 2+ would time a cache hit instead of the operator.
-        # blocking=True: the default async unpersist would otherwise run
-        # concurrently with the next pass's timed queries and contend for
-        # the block manager (the suspected cause of r5's driver-run passes
-        # getting SLOWER on exactly the cached operators).
-        from csv_etl_spark.operators import classify as _classify
-        from csv_etl_spark.operators import dedup as _dedup
-        from csv_etl_spark.operators import graph as _graph
-        from csv_etl_spark.operators import multimodal as _mm
-        from csv_etl_spark.operators import packing as _pack
-        from csv_etl_spark.operators import similarity as _sim
-        from csv_etl_spark.operators import text as _text
-
-        _dedup._SHINGLE_CACHE.invalidate(blocking=True)
-        _sim._BUCKET_CACHE.invalidate(blocking=True)
-        _sim._ASSIGNED_CACHE.invalidate(blocking=True)
-        _mm._DHASH_CACHE.invalidate(blocking=True)
-        _text._TF_CACHE.invalidate(blocking=True)
-        # r17: learned BPE merge tables (driver-side memo)
-        _text._MERGE_MEMO.invalidate(blocking=True)
-        # r7 fix: the prefix-sum cache was NOT cleared in r5/r6 benches, so
-        # pack_sequences / corpus_shuffle passes 2+ timed a persisted range
-        # shuffle instead of the operator — their honest medians rise a bit
-        _pack._CUMSUM_CACHE.invalidate(blocking=True)
-        # r8 addition: the classifier's (doc, feature) pair cache
-        _classify._FEAT_CACHE.invalidate(blocking=True)
-        # r9 addition: pagerank's persisted link table
-        _graph._LINKS_CACHE.invalidate(blocking=True)
-        # r13 addition (ADVICE r12): knn_join_sharded codebook broadcasts
-        # otherwise accumulate ~128 MB/call across bench passes; destroy=True
-        # is safe here — every returned frame was consumed by the timed pass
-        _sim.release_sharded_broadcasts(destroy=True)
-
     env_start = _env_stamp()
 
     # r16 (verdict ask #4): SAMPLED calibration.  A single start/end probe
@@ -352,7 +317,11 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             runs[name].append(round(time.perf_counter() - t0, 3))
             _cal_quick()
-        clear_operator_caches()
+        # persisted operator projections survive across calls by design;
+        # between passes they must go, or pass 2+ would time a cache hit.
+        # Blocking unpersist: an async one would contend with the next
+        # pass's timed queries for the block manager.
+        clear_all()
 
     from statistics import median
 

@@ -291,12 +291,14 @@ def create_app(
         source, path, err = _source_file(source_id, filename)
         if err:
             return err
-        df = with_line_numbers(read_spec_csv(spark, str(path), source))
-        columns = [c for c in df.columns if c != LINE_COL]
         # bounded collect: first N lines (override with ?limit=), full count
         # reported separately — a preview must never materialize a 100 GB
         # file on the driver
         row_cap = request.args.get("limit", type=int) or DEFAULT_PREVIEW_ROWS
+        if row_cap < 0:
+            return jsonify({"error": "limit must not be negative"}), 400
+        df = with_line_numbers(read_spec_csv(spark, str(path), source))
+        columns = [c for c in df.columns if c != LINE_COL]
         total = df.count()
         rows = [
             {"_line": r[LINE_COL], **{c: r[c] for c in columns}}
@@ -342,7 +344,14 @@ def create_app(
         line, row = data.get("line"), data.get("row")
         if not line or not row:
             return jsonify({"error": "Missing line number or row data"}), 400
-        update_csv_row(spark, str(path), int(line), row, spec=source)
+        try:
+            line = int(line)
+        except (TypeError, ValueError):
+            return jsonify({"error": f"Line number must be an integer: {line!r}"}), 400
+        try:
+            update_csv_row(spark, str(path), line, row, spec=source)
+        except ValueError as exc:  # a column the file lacks
+            return jsonify({"error": str(exc)}), 400
         return jsonify({"success": True, "message": f"Row {line} updated"})
 
     # -- single-file convert (app.py:625-677) --------------------------------

@@ -1,14 +1,23 @@
-"""Session-aware bounded cache for persisted DataFrames.
+"""Session-aware bounded cache for operator intermediates, and the
+registry that lets one call empty them all.
 
 Operators that stage an expensive intermediate (shingle tables, LSH
 bucket projections) persist it and register it here so repeated calls
-over the same corpus reuse one materialization.  Two failure modes this
-guards against (ADVICE round 1):
+over the same corpus reuse one materialization; small driver-side values
+derived from a plan (the BPE merge table) use the same cache.  Two
+failure modes this guards against (ADVICE round 1):
 
-* cached DataFrames outliving their SparkSession — keys embed the
+* cached values outliving their SparkSession — keys embed the
   applicationId, and any entry from a different (stopped/recreated)
   session is dropped on the next access;
-* unbounded growth — FIFO-bounded, evictees unpersisted.
+* unbounded growth — FIFO-bounded; evicted DataFrames are unpersisted,
+  other values are just dropped.
+
+Every ``BoundedPersistCache`` adds itself to a module-level registry when
+it is constructed, and :func:`clear_all` empties every registered cache
+and releases the sharded codebook broadcasts.  Benchmark harnesses call
+it between timed passes, so no pass can time a cache hit and no harness
+keeps a per-module list that a new cache could be missing from.
 
 ``invalidate()`` is the explicit hook for when the underlying data is
 rewritten in place (same plan, same semanticHash, different bytes —
@@ -19,11 +28,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+_REGISTRY: list[BoundedPersistCache] = []
+
 
 class BoundedPersistCache:
     def __init__(self, max_entries: int = 8) -> None:
-        self._entries: dict[tuple, DataFrame] = {}
+        self._entries: dict[tuple, object] = {}
         self._max = max_entries
+        _REGISTRY.append(self)
 
     @staticmethod
     def key_for(df: DataFrame, *extra) -> tuple | None:
@@ -55,20 +67,20 @@ class BoundedPersistCache:
         self.put(key, df)
         return df
 
-    def get(self, key: tuple | None) -> DataFrame | None:
+    def get(self, key: tuple | None):
         if key is None:
             return None
         self._evict_other_sessions(key[0])
         return self._entries.get(key)
 
-    def put(self, key: tuple | None, df: DataFrame) -> None:
+    def put(self, key: tuple | None, value) -> None:
         if key is None:
             return
         self._evict_other_sessions(key[0])
         while len(self._entries) >= self._max:
             oldest = next(iter(self._entries))
             self._drop(oldest)
-        self._entries[key] = df
+        self._entries[key] = value
 
     def invalidate(self, key: tuple | None = None, blocking: bool = False) -> None:
         """Drop one entry (or all, when key is None), unpersisting.
@@ -91,50 +103,25 @@ class BoundedPersistCache:
             self._drop(k)
 
     def _drop(self, key: tuple, blocking: bool = False) -> None:
-        df = self._entries.pop(key, None)
-        if df is not None:
+        value = self._entries.pop(key, None)
+        if isinstance(value, DataFrame):
             try:
-                df.unpersist(blocking=blocking)
+                value.unpersist(blocking=blocking)
             except Exception:
                 pass
 
 
-class BoundedDriverMemo:
-    """Session-aware bounded memo for SMALL driver-side values derived
-    from a DataFrame plan (r17: the BPE merge table — k rows, the merge
-    table IS the model).  Same keying discipline as BoundedPersistCache
-    — (applicationId, semanticHash, *extra), entries from stopped
-    sessions evicted on access, FIFO-bounded — but values are plain
-    Python objects, so eviction has nothing to unpersist.
-    ``invalidate(blocking=...)`` matches the persist cache's signature
-    so bench harnesses clear every operator cache uniformly."""
+# the benchmark's cache walk (perfbench/caches.py) still imports this name
+BoundedDriverMemo = BoundedPersistCache
 
-    def __init__(self, max_entries: int = 8) -> None:
-        self._entries: dict[tuple, object] = {}
-        self._max = max_entries
 
-    key_for = staticmethod(BoundedPersistCache.key_for)
+def clear_all() -> None:
+    """Empty every registered cache with a blocking unpersist, then
+    destroy the sharded codebook broadcasts.  Only safe where no frame an
+    operator returned is still to be consumed (between benchmark passes):
+    destroyed broadcasts make such a frame unusable."""
+    from csv_etl_spark.operators import similarity
 
-    def get(self, key: tuple | None):
-        if key is None:
-            return None
-        self._evict_other_sessions(key[0])
-        return self._entries.get(key)
-
-    def put(self, key: tuple | None, value) -> None:
-        if key is None:
-            return
-        self._evict_other_sessions(key[0])
-        while len(self._entries) >= self._max:
-            self._entries.pop(next(iter(self._entries)))
-        self._entries[key] = value
-
-    def invalidate(self, key: tuple | None = None, blocking: bool = False) -> None:
-        if key is not None:
-            self._entries.pop(key, None)
-            return
-        self._entries.clear()
-
-    def _evict_other_sessions(self, app_id: str) -> None:
-        for k in [k for k in self._entries if k[0] != app_id]:
-            self._entries.pop(k, None)
+    for cache in _REGISTRY:
+        cache.invalidate(blocking=True)
+    similarity.release_sharded_broadcasts(destroy=True)

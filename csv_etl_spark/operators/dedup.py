@@ -149,12 +149,6 @@ _MAX_HOT_BUCKETS = 100_000
 _MAX_INLINE_HOT_BUCKETS = 2_000
 
 
-def clear_shingle_cache() -> None:
-    """Invalidation hook: call after rewriting a corpus in place (same
-    path, same plan shape — semantic hashing cannot detect new bytes)."""
-    _SHINGLE_CACHE.invalidate()
-
-
 def _shingle_docs(
     df: DataFrame, text_col: str, id_col: str, n: int, portable: bool = False
 ) -> DataFrame:

@@ -51,7 +51,6 @@ from ._cache import BoundedPersistCache
 # the (src, dst, outdeg) link table is re-read by every power iteration
 # (iters consumers): per the repo's multi-consumer rule it must be
 # persisted or the edge scan + degree agg recompute per iteration.
-# Registered in bench.py's and scripts/scale_bench.py's clear lists.
 _LINKS_CACHE = BoundedPersistCache(max_entries=4)
 
 

@@ -25,10 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from csv_etl_spark.operators._cache import BoundedPersistCache as _BPC
+from csv_etl_spark.operators._cache import BoundedPersistCache
 
 # persisted dHash projection reused by both sides of the band self-join
-_DHASH_CACHE = _BPC(max_entries=4)
+_DHASH_CACHE = BoundedPersistCache(max_entries=4)
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -331,8 +331,6 @@ def dhash_near_dup_pairs(
     without it BOTH join sides re-decode and re-hash every image (2× the
     expensive kernel — the same HOF-opacity trap as the shingle/LSH
     projections).  Returns ``(id_a, id_b, hamming)``, one row per pair."""
-    from pyspark.storagelevel import StorageLevel
-
     if band_arity not in (1, 2):
         raise ValueError("band_arity must be 1 or 2")
     if band_arity == 2 and max_hamming > 2 and not allow_recall_gap:
@@ -360,13 +358,7 @@ def dhash_near_dup_pairs(
                 "data decade at 5M). Use the default band_arity=2, or "
                 "raise/disable max_exact_media deliberately."
             )
-    key = _BPC.key_for(hashes, "dhash_pairs", max_hamming, band_arity)
-    cached = _DHASH_CACHE.get(key)
-    if cached is not None:
-        hashes = cached
-    elif key is not None:
-        hashes = hashes.persist(StorageLevel.MEMORY_AND_DISK)
-        _DHASH_CACHE.put(key, hashes)
+    hashes = _DHASH_CACHE.get_or_persist(hashes, "dhash_pairs", max_hamming, band_arity)
     if band_arity == 1:
         keys_arr = F.array(
             *[

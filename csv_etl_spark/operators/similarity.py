@@ -24,6 +24,7 @@ Two paths, same output contract (probe_id, neighbor_id, cosine, rank):
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -945,20 +946,10 @@ def semantic_dedup(
     # broadcast-argmax assignment and the upstream scan recompute ~3x
     # (ADVICE round 4).  Same bounded-cache pattern as the LSH bucket
     # projection above — entries are session-scoped and unpersisted on
-    # eviction.
-    key = _BPC.key_for(assigned, "semantic_dedup")
-    cached = _ASSIGNED_CACHE.get(key)
-    if cached is not None:
-        assigned = cached
-    elif key is not None:
-        from pyspark import StorageLevel
-
-        assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-        _ASSIGNED_CACHE.put(key, assigned)
-    # key is None → no cache slot will track this frame: per the
-    # key_for contract, skip persisting too (an untracked persist
-    # would leak for the session's lifetime); the ~3x recompute is
-    # the documented fallback price
+    # eviction.  An untrackable plan passes through unpersisted (an
+    # untracked persist would leak for the session's lifetime); the ~3x
+    # recompute is the documented fallback price.
+    assigned = _ASSIGNED_CACHE.get_or_persist(assigned, "semantic_dedup")
 
     pairable = assigned
     if max_cluster_size is not None:
@@ -1389,8 +1380,9 @@ def release_sharded_broadcasts(blocking: bool = True, destroy: bool = False) -> 
     ``unpersist`` drops executor-side copies (a later re-execution of a
     returned frame refetches from the driver, so it is always safe);
     ``destroy=True`` additionally frees the driver-side copy but makes
-    any still-unconsumed returned DataFrame unusable — bench's
-    clear_operator_caches uses it between passes where nothing is live.
+    any still-unconsumed returned DataFrame unusable —
+    ``_cache.clear_all()`` uses it between benchmark passes, where
+    nothing is live.
     Returns the number of broadcasts released."""
     n = len(_SHARDED_BROADCASTS)
     for bc in _SHARDED_BROADCASTS:
@@ -1609,7 +1601,7 @@ def _sharded_router_factory(
     # repeated calls (recall ladders, bench loops) accumulate broadcasts
     # for the session lifetime.  Registered here, released via
     # release_sharded_broadcasts() once the returned frame is consumed
-    # (bench clear_operator_caches does this between passes).
+    # (_cache.clear_all() does this between benchmark passes).
     _SHARDED_BROADCASTS.append(bc)
     m_val = None if m_super is None else min(int(m_super), n_super)
 
@@ -2435,26 +2427,20 @@ def calibrate_nprobe(
     return int(curve[-1]["nprobe"]) if curve else max(nprobe_grid), curve
 
 
+@functools.cache
 def _hyperplanes_cached(dim: int, n_planes: int):
     """numpy dim × n_planes plane matrix, cached per (dim, n_planes)."""
-    key = (dim, n_planes)
-    mat = _PLANES_CACHE.get(key)
-    if mat is None:
-        mat = np.array(_hyperplanes(dim, n_planes)).T
-        _PLANES_CACHE[key] = mat
-    return mat
+    return np.array(_hyperplanes(dim, n_planes)).T
 
-
-_PLANES_CACHE: dict = {}
 
 # bounded session-aware cache for the persisted bucketed projection used by
 # embedding_dup_pairs (see csv_etl_spark.operators._cache)
-from csv_etl_spark.operators._cache import BoundedPersistCache as _BPC  # noqa: E402
+from csv_etl_spark.operators._cache import BoundedPersistCache  # noqa: E402
 
-_BUCKET_CACHE = _BPC(max_entries=4)
+_BUCKET_CACHE = BoundedPersistCache(max_entries=4)
 
 # persisted centroid-assignment used 3x inside semantic_dedup
-_ASSIGNED_CACHE = _BPC(max_entries=4)
+_ASSIGNED_CACHE = BoundedPersistCache(max_entries=4)
 
 
 def _hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
@@ -2527,7 +2513,6 @@ def embedding_dup_pairs(
     the life of the session."""
     from pyspark.storagelevel import StorageLevel
 
-    from csv_etl_spark.operators._cache import BoundedPersistCache
     from csv_etl_spark.sources.tables import ensure_parallelism
 
     src = ensure_parallelism(df.select(F.col(id_col), F.col(vec_col)))

@@ -12,16 +12,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from csv_etl_spark.operators._cache import BoundedDriverMemo as _BDM
-from csv_etl_spark.operators._cache import BoundedPersistCache as _TF_BPC
+from csv_etl_spark.operators._cache import BoundedPersistCache
 
 # persisted (doc, token) tf table reused by tfidf_top_terms' df-agg + join
-_TF_CACHE = _TF_BPC(max_entries=4)
+_TF_CACHE = BoundedPersistCache(max_entries=4)
 
 # r17: learned BPE merge tables, keyed by (tokenized-input plan,
-# min_count, joiner) — see phrase_merges.  Driver-side lists, session-
-# bounded, cleared between bench passes exactly like the persist caches.
-_MERGE_MEMO = _BDM(max_entries=8)
+# min_count, joiner) — see phrase_merges.  Driver-side tuples in the same
+# session-bounded cache class: eviction just drops them, and
+# _cache.clear_all() empties this cache with the others.
+_MERGE_MEMO = BoundedPersistCache(max_entries=8)
 
 # Small, order-stable English stopword list — shared with the DuckDB oracle.
 EN_STOPWORDS = [
@@ -889,7 +889,7 @@ def phrase_merges(
     )
 
     # r17: session-bounded merge-table memo (the _CUMSUM_CACHE /
-    # _TF_CACHE discipline, invalidated between bench passes).  BPE is
+    # _TF_CACHE discipline, emptied by _cache.clear_all()).  BPE is
     # prefix-stable — merge i depends only on merges 1..i-1 — so a
     # table trained at k'≥k over the same tokenized input answers any
     # smaller k verbatim, and a shorter cached table is a valid restart

@@ -21,28 +21,6 @@ from statistics import median
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def clear_operator_caches() -> None:
-    from csv_etl_spark.operators import classify as _classify
-    from csv_etl_spark.operators import dedup as _dedup
-    from csv_etl_spark.operators import graph as _graph
-    from csv_etl_spark.operators import multimodal as _mm
-    from csv_etl_spark.operators import packing as _pack
-    from csv_etl_spark.operators import similarity as _sim
-    from csv_etl_spark.operators import text as _text
-
-    _dedup._SHINGLE_CACHE.invalidate(blocking=True)
-    _sim._BUCKET_CACHE.invalidate(blocking=True)
-    _sim._ASSIGNED_CACHE.invalidate(blocking=True)
-    _mm._DHASH_CACHE.invalidate(blocking=True)
-    _text._TF_CACHE.invalidate(blocking=True)
-    # r17: learned BPE merge tables (driver-side memo)
-    _text._MERGE_MEMO.invalidate(blocking=True)
-    _pack._CUMSUM_CACHE.invalidate(blocking=True)
-    _classify._FEAT_CACHE.invalidate(blocking=True)
-    _graph._LINKS_CACHE.invalidate(blocking=True)
-    _sim.release_sharded_broadcasts(destroy=True)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--conf", required=True)
@@ -58,6 +36,7 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from csv_etl_spark import get_spark
+    from csv_etl_spark.operators._cache import clear_all
     from pyspark.sql import functions as F
 
     spark = get_spark("ab-interleaved")
@@ -96,7 +75,7 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             times[arm][n].append(round(time.perf_counter() - t0, 3))
             cals[arm].append(cal())
-        clear_operator_caches()
+        clear_all()
         print(f"pass {p} arm={arm} done", file=sys.stderr)
 
     report = {"conf": args.conf, "a": args.a, "b": args.b, "passes": args.passes}

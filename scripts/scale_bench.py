@@ -31,6 +31,7 @@ import pandas as pd  # noqa: E402  (module scope: pandas_udf type-hint resolutio
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from csv_etl_spark import get_spark  # noqa: E402
+from csv_etl_spark.operators._cache import clear_all  # noqa: E402
 
 # query -> largest step it runs at.  dedup_jaccard_pairs (the EXACT
 # variant) stops at 50k: the generated corpus draws from the measured
@@ -176,34 +177,6 @@ STEPS = [
 ]
 STEP_ORDER = [s[0] for s in STEPS]
 N_RUNS = 3
-
-
-def clear_caches() -> None:
-    from csv_etl_spark.operators import classify as _classify
-    from csv_etl_spark.operators import graph as _graph
-    from csv_etl_spark.operators import dedup as _dedup
-    from csv_etl_spark.operators import multimodal as _mm
-    from csv_etl_spark.operators import packing as _pack
-    from csv_etl_spark.operators import similarity as _sim
-    from csv_etl_spark.operators import text as _text
-
-    _dedup._SHINGLE_CACHE.invalidate(blocking=True)
-    _sim._BUCKET_CACHE.invalidate(blocking=True)
-    _sim._ASSIGNED_CACHE.invalidate(blocking=True)
-    _mm._DHASH_CACHE.invalidate(blocking=True)
-    _text._TF_CACHE.invalidate(blocking=True)
-    # r17: learned BPE merge tables (driver-side memo)
-    _text._MERGE_MEMO.invalidate(blocking=True)
-    # same r7 fix as bench.py: prefix-sum cache must not serve passes 2+
-    _pack._CUMSUM_CACHE.invalidate(blocking=True)
-    # r8 addition: the classifier's (doc, feature) pair cache
-    _classify._FEAT_CACHE.invalidate(blocking=True)
-    # r9 addition: pagerank's persisted link table
-    _graph._LINKS_CACHE.invalidate(blocking=True)
-    # r13 addition (ADVICE r12): knn_join_sharded codebook broadcasts —
-    # ladder runs call the sharded tier once per decade per run and the
-    # ~128 MB/call broadcasts would otherwise accumulate all session
-    _sim.release_sharded_broadcasts(destroy=True)
 
 
 def _extra_queries() -> dict:
@@ -366,10 +339,10 @@ def main() -> None:
                 df = qs[q](spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
-                clear_caches()
+                clear_all()
             results[q][step_name] = round(median(runs), 3)
             rows_out[q][step_name] = qs[q](spark, sf_dir).count()
-            clear_caches()
+            clear_all()
             # shuffle files are deleted only when the ContextCleaner GCs
             # the owning RDDs; across 3 runs × result-count of a 5M-doc
             # LSH matrix the stale files outran the 78 GB scratch disk

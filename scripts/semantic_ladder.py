@@ -117,7 +117,7 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    from scale_bench import clear_caches
+    from csv_etl_spark.operators._cache import clear_all
 
     def run_dedup(sf_dir: str, n: int, cap: int | None):
         # deterministic first-(N//512) codebook — the contract queries'
@@ -197,7 +197,7 @@ def main() -> None:
                 flush=True,
             )
             similarity.release_sharded_broadcasts()
-            clear_caches()
+            clear_all()
         runs_for_size = min(n_runs, RUNS_CAP.get(size, n_runs))
         out = None
         for i in range(runs_for_size):
@@ -218,7 +218,7 @@ def main() -> None:
             env_runs[size].append(bench._env_stamp())
             print(f"{size} run{i}: {dt}s", file=sys.stderr, flush=True)
             if not last:
-                clear_caches()
+                clear_all()
         # result-shape stats off the persisted final run: kept fraction +
         # the cluster-size census the Σ|cluster|² claim rides on
         agg = out.agg(
@@ -252,7 +252,7 @@ def main() -> None:
             # the guard pass (below) runs at the LAST size and reuses
             # its cached assignment (identical fit + routing; only the
             # cluster-size cap differs) — keep the operator caches warm
-            clear_caches()
+            clear_all()
 
     # FAIL-OPEN GUARD, exercised at the big size: cap far below the
     # measured max cluster so the skip branch runs for real.  Oversized
@@ -286,7 +286,7 @@ def main() -> None:
             "total_rows": e.count(),
         }
         print(f"guard: {guard}", file=sys.stderr, flush=True)
-        clear_caches()
+        clear_all()
 
     med = {s: round(median(r), 3) for s, r in results.items() if r}
     payload: dict = {

@@ -151,6 +151,29 @@ def test_preview_row_cap(env):
     assert body["rows"][0]["_line"] == 2
 
 
+def test_preview_negative_limit_is_400(env):
+    client, _, _ = env
+    r = client.get("/api/preview/src1/a.csv?limit=-3")
+    assert r.status_code == 400 and "error" in r.get_json()
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        {"line": "three", "row": {"Date": "2024-01-16"}},
+        {"line": 3, "row": {"NoSuchColumn": "x"}},
+    ],
+    ids=["non_integer_line", "unknown_column"],
+)
+def test_update_bad_input_is_400_and_leaves_file(env, payload):
+    client, tmp_path, _ = env
+    csv = tmp_path / "in" / "s1" / "a.csv"
+    before = csv.read_bytes()
+    r = client.post("/api/preview/src1/a.csv/update", json=payload)
+    assert r.status_code == 400 and "error" in r.get_json()
+    assert csv.read_bytes() == before
+
+
 def test_error_entries_default_cap(env, monkeypatch):
     """Listed errors come from the one cap, ERROR_LIST_CAP, never
     unbounded (the reference UI's 50-error cap, app.py:221)."""

@@ -5088,3 +5088,104 @@ def test_kmeans_codebook_table_matches_literal_fit(spark):
     assert set(lit) == set(tab)
     for cid, vec in lit.items():
         assert vec == pytest.approx(tab[cid], abs=1e-9), f"centroid {cid}"
+
+
+# ---------------------------------------------------------------------------
+# operator caches: the one cache class, its registry and clear_all
+# ---------------------------------------------------------------------------
+
+
+def test_cache_fifo_bound_unpersists_the_oldest_frame(spark):
+    from csv_etl_spark.operators._cache import BoundedPersistCache
+
+    cache = BoundedPersistCache(max_entries=2)
+    frames = [cache.get_or_persist(spark.range(n + 1), "fifo") for n in range(3)]
+    assert [f.is_cached for f in frames] == [False, True, True]
+    assert len(cache._entries) == 2
+    cache.invalidate(blocking=True)
+    assert cache._entries == {} and not any(f.is_cached for f in frames)
+
+
+def test_cache_evicts_driver_values_without_unpersisting(spark):
+    from csv_etl_spark.operators._cache import BoundedPersistCache
+
+    cache = BoundedPersistCache(max_entries=1)
+    app = spark.sparkContext.applicationId
+    cache.put((app, 1), (("a", "b"), False))
+    cache.put((app, 2), (("c", "d"), True))
+    assert list(cache._entries) == [(app, 2)]
+    cache.invalidate((app, 2), blocking=True)
+    assert cache._entries == {}
+
+
+def test_cache_put_from_another_session_drops_earlier_entries(spark):
+    from csv_etl_spark.operators._cache import BoundedPersistCache
+
+    cache = BoundedPersistCache()
+    old = spark.range(5).persist()
+    cache.put(("stopped-app", 1), old)
+    cache.put(("stopped-app", 2), ("merges",))
+    cache.put(("live-app", 1), ("merges",))
+    assert list(cache._entries) == [("live-app", 1)]
+    assert not old.is_cached
+    cache.invalidate()
+
+
+def test_cache_untrackable_plan_passes_through_unpersisted(spark, monkeypatch):
+    from csv_etl_spark.operators._cache import BoundedPersistCache
+
+    cache = BoundedPersistCache()
+    monkeypatch.setattr(cache, "key_for", lambda df, *extra: None)
+    df = spark.range(3)
+    out = cache.get_or_persist(df, "untracked")
+    assert out is df and not out.is_cached
+    assert cache._entries == {}
+
+
+def test_every_module_cache_is_registered_and_clear_all_empties_them(spark):
+    """Caches register themselves, so a cache added to any module is
+    cleared between benchmark passes without editing a harness."""
+    import importlib
+    import pkgutil
+
+    import csv_etl_spark
+    from csv_etl_spark.operators import _cache
+
+    found = {}
+    for info in pkgutil.walk_packages(csv_etl_spark.__path__, "csv_etl_spark."):
+        if info.name.endswith("__main__"):  # importing it runs the CLI
+            continue
+        mod = importlib.import_module(info.name)
+        for attr, value in vars(mod).items():
+            if isinstance(value, _cache.BoundedPersistCache):
+                found[f"{info.name}.{attr}"] = value
+    assert len(found) >= 9
+    assert [n for n, c in found.items() if not any(c is r for r in _cache._REGISTRY)] == []
+
+    frames = []
+    for n, cache in enumerate(found.values()):
+        frames.append(cache.get_or_persist(spark.range(n + 1), "registry"))
+        cache.put((spark.sparkContext.applicationId, "driver", n), ("merges",))
+    similarity._SHARDED_BROADCASTS.append(spark.sparkContext.broadcast([1]))
+    _cache.clear_all()
+    assert {n: len(c._entries) for n, c in found.items() if c._entries} == {}
+    assert not any(f.is_cached for f in frames)
+    assert similarity._SHARDED_BROADCASTS == []
+
+
+def test_harnesses_name_no_operator_cache():
+    """Benchmark harnesses empty the caches with ``_cache.clear_all()``;
+    a hand-kept list of cache attributes goes stale when a cache is
+    added (a pass once timed cache hits that way)."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pattern = re.compile(r"_[A-Z_]+_(CACHE|MEMO)")
+    hits = [
+        f"{path.relative_to(root)}:{i}"
+        for path in [root / "bench.py", *sorted((root / "scripts").glob("*.py"))]
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert hits == []
